@@ -1,0 +1,10 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the one listener-bus call the benchmark needs that Spark
+  * keeps package-private: waiting until every posted event has reached
+  * the listeners, so a query's spans are complete before they are read. */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
