@@ -4,6 +4,9 @@ run graft.Verify at a given SF, then compare each query's parquet output
 against the DuckDB oracle (exact values, schema-ish, row order).
 
 Usage: python3 scripts/check.py [sfDir] [outDir] [--skip-verify] [only_query...]
+
+Exits 0 iff at least one query was compared and every compared query
+passed; any FAIL, ERROR or NO_SPARK_OUTPUT exits 1.
 """
 import sys, os, json, glob
 import duckdb
@@ -109,3 +112,4 @@ for k, v in sorted(results.items()):
 print("== rows-only queries ==")
 for line in no_oracle:
     print("  " + line)
+sys.exit(0 if results and ok == len(results) else 1)

@@ -8,8 +8,8 @@ nothing ever tested that the gate catches a seeded defect. This script
 is mutation testing for the oracle harness itself: copy a query's dump
 out of an existing Verify run, seed ONE defect per class, and assert
 scripts/check.py reports FAIL (or, for the documented-by-design cases,
-PASS) exactly as the oracle contract claims. Exit 0 iff every case
-behaves.
+PASS) exactly as the oracle contract claims, and exits 0 exactly when
+it reports PASS. Exit 0 iff every case behaves.
 
 Defect classes, against the hardened partial oracles (q220/q222/q224):
   drop     a dump row vanishes        → -888 missing-key sentinel
@@ -167,9 +167,9 @@ def run_case(mut_q: str, kind: str, check_q: str, expected: str,
         if line.startswith(("PASS ", "FAIL ")) and check_q in line:
             verdict, detail = line.split()[0], line
             break
-    ok = verdict == expected
+    ok = verdict == expected and (r.returncode == 0) == (verdict == "PASS")
     print(f"{'ok ' if ok else 'BAD'}  {mut_q:22s} {kind:8s}"
-          f" -> {check_q:22s} expected={expected} got={verdict}"
+          f" -> {check_q:22s} expected={expected} got={verdict} rc={r.returncode}"
           + ("" if ok else f"\n     {detail}"))
     return ok
 

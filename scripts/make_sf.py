@@ -5,9 +5,10 @@ one-off full-gate run at a 10x step beyond the driver's largest fixture
 (VERDICT r9 item 4). Replication keeps the data shape ORGANIC rather than
 clique-hostile (that regime is tools.Soak's job):
 
-- TPC-H tables follow tools.SoakTpch's key-offset scheme (orderkey /
-  custkey / suppkey shift by copy*10^9; nation/region/part stay
-  single-copy) so join cardinalities scale linearly;
+- TPC-H tables get key offsets (orderkey / custkey / suppkey shift by
+  copy*10^9; nation/region/part stay single-copy) so join cardinalities
+  scale linearly, the broadcast dims stay broadcastable and no
+  cross-copy edges appear;
 - documents get per-copy word suffixes (every token of copy k>0 becomes
   `tok_k`), so NO cross-copy n-gram/shingle overlap exists and the
   pair-quadratic queries (q44/q45/q98/q148...) scale linearly instead of
@@ -20,6 +21,11 @@ clique-hostile (that regime is tools.Soak's job):
 Correctness is unaffected by any of this: the gate compares Spark vs
 DuckDB on the SAME generated parquet. Usage:
   python3 scripts/make_sf.py [outDir] [copies]
+
+The generated dir is also the TPC-H macro soak: run the Bench rows
+against it, e.g.
+  SPARK_GRAFT_SF_DIR=/tmp/sf1 SPARK_GRAFT_ITERS=1 \
+  SPARK_GRAFT_BENCH_ONLY=q01_groupby_agg,q137_tpch_q1,... sbt "runMain graft.Bench"
 """
 import sys
 

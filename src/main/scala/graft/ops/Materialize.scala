@@ -94,20 +94,24 @@ object Materialize {
     }
 
   /** Pin `df` per the current strategy. The eager checkpoint job is
-    * labelled with the first graft call site outside this object so
-    * per-job profiles ([[graft.tools.Profile]]) attribute pin cost to
-    * the operator that requested it instead of an anonymous job. */
+    * labelled `pin @ <site>`, the first graft call site outside this
+    * object, so per-job profiles (`graft.tools.QBench --profile`)
+    * attribute pin cost to the operator that requested it instead of
+    * an anonymous job. Under [[Off]] no job runs, so there is nothing
+    * to label. */
   private[graft] def pin(df: DataFrame): DataFrame = {
+    val how = strategy
+    if (how == Off) return df
     val sc = df.sparkSession.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     val site = Thread.currentThread.getStackTrace
       .find(e => e.getClassName.startsWith("graft.") &&
-        !e.getClassName.contains("Materialize"))
+        !e.getClassName.startsWith("graft.ops.Materialize"))
       .map(e => s"${e.getClassName.stripPrefix("graft.")}.${e.getMethodName}:${e.getLineNumber}")
       .getOrElse("?")
     sc.setJobDescription(s"pin @ $site")
     val pinned =
-      try strategy.pinFrame(df)
+      try how.pinFrame(df)
       finally sc.setJobDescription(prev)
     val reg = batchPins.get()
     if (reg != null && (pinned ne df)) pinnedRdds(pinned).foreach(reg.add)

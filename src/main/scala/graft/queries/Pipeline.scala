@@ -2359,7 +2359,7 @@ object Pipeline {
     // field materializes.
     //
     // r10 flat-schema fast-path adjudication (VERDICT r9 item 6,
-    // tools.JsonAb, fresh session, 7 iters, sf0.1, identical results
+    // one-off fresh-session A/B, 7 iters, sf0.1, identical results
     // verified): this from_json+get_json_object shape 0.69 s median /
     // get_json_object-only chain 0.59 s / json_tuple single-parse
     // 0.40 s. Kept as-is — this row gates the schema-on-read API
@@ -2599,7 +2599,7 @@ object Pipeline {
 
     // --- flat-schema JSON extraction fast path (json_tuple) -----------------
     // (functions.jsonGetMany — SAME result as q146 (verified identical
-    // by tools.JsonAb before registration) with ONE streaming parse per
+    // by a fresh-session A/B before registration) with ONE streaming parse per
     // row for all requested fields instead of from_json's
     // CodegenFallback struct + a second get_json_object parse:
     // 0.40 s vs 0.69 s median at sf0.1. The oracle is q146's verbatim —

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Dedup-path soak at sf1-equivalent scale (VERDICT r5 item 6): the
@@ -18,14 +18,13 @@ import org.apache.spark.sql.functions._
   *
   * Run: SPARK_GRAFT_SOAK_COPIES=10 sbt "runMain graft.tools.Soak"
   *
-  * Adjudication mode (the SoakTpch protocol, round-10): a
-  * comma-separated `SPARK_GRAFT_SOAK_OPS` runs only those ops, and
-  * `SPARK_GRAFT_SOAK_ITERS` > 1 switches from single-shot timing
-  * (cliff/OOM bounding) to median-of-N with min/max spread plus
-  * inter-iteration GC — the mode that separates a real per-op
-  * regression from ambient host pressure. Every persisted /
+  * Adjudication mode: a comma-separated `SPARK_GRAFT_SOAK_OPS` runs
+  * only those ops, and `SPARK_GRAFT_SOAK_ITERS` > 1 switches from
+  * single-shot timing (cliff/OOM bounding) to median-of-N with min/max
+  * spread plus inter-iteration GC — the mode that separates a real
+  * per-op regression from ambient host pressure. Every persisted /
   * localCheckpointed block is released between ops AND between
-  * iterations (the Bench.releaseCheckpoints rationale: each run
+  * iterations ([[Harness.release]]: each run
   * re-checkpoints its own frames, so carried blocks are pure storage
   * contamination); ops that internally share a checkpoint (the PQ
   * family) build their own inside the timed thunk.
@@ -35,15 +34,8 @@ object Soak {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SOAK_COPIES", "10").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_SOAK_DIR", "/tmp/soak")
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(cpus)
 
     // ---- build the expanded table once per run ---------------------------
     // (SPARK_GRAFT_SOAK_REUSE=1 skips the rewrite when the scaled dir
@@ -76,8 +68,7 @@ object Soak {
     val nDocs = big.count()
 
     def release(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Harness.release(spark)
       // broadcasts (tokenizer vocabs, keep-sets) are cleaned by the
       // ContextCleaner only after driver GC notices they're
       // unreachable; without a forced GC between ops their torrent
@@ -109,6 +100,13 @@ object Soak {
       graft.ops.Embeddings.pqEncode(col("embedding"), cbs).as("codes"))
       .localCheckpoint()
     lazy val bench = docs.filter(col("doc_id") % 20 === 7)
+    // 10k IDENTICAL docs: one mega-clique for the bucket-cap ops
+    lazy val planted = spark.range(10_000).select(
+      (col("id") + lit(900_000_000L)).as("doc_id"),
+      lit("planted mega bucket boilerplate page body shared by " +
+        "the whole mirror farm with identical words throughout").as("text"),
+      lit("en").as("lang"), lit("planted").as("source"),
+      lit(100L).cast(big.schema("n_chars").dataType).as("n_chars"))
 
     // ---- op registry (name → thunk returning the row count) --------------
     val ops: Seq[(String, () => Long)] = Seq(
@@ -129,16 +127,10 @@ object Soak {
       // a 10k-clique → 5·10⁷ pairs × 32 bands in one bucket; the
       // DefaultMaxBucket guard must drop the clique's buckets (warn
       // log) and finish flat at organic cost
-      "minhash_megabucket" -> (() => {
-        val planted = spark.range(10_000).select(
-          (col("id") + lit(900_000_000L)).as("doc_id"),
-          lit("planted mega bucket boilerplate page body shared by " +
-            "the whole mirror farm with identical words throughout")
-            .as("text"))
+      "minhash_megabucket" -> (() =>
         graft.ops.Dedup.minhashLsh(
-          big.select("doc_id", "text").unionByName(planted),
-          "doc_id", "text", 0.8).count()
-      }),
+          big.select("doc_id", "text").unionByName(planted.select("doc_id", "text")),
+          "doc_id", "text", 0.8).count()),
       // r15: the megabucket guard THROUGH the end-to-end wrapper —
       // the r14 soak capped minhashLsh only; dedupNearCanonical now
       // inherits the default cap, so the planted 10k identical-text
@@ -147,17 +139,9 @@ object Soak {
       // dedup first is the documented mitigation) while the organic
       // copies-cliques still dedup to their argmax-n_chars
       // representative. Runtime must stay flat at organic cost.
-      "dedup_near_canonical" -> (() => {
-        val planted = spark.range(10_000).select(
-          (col("id") + lit(900_000_000L)).as("doc_id"),
-          lit("planted mega bucket boilerplate page body shared by " +
-            "the whole mirror farm with identical words throughout")
-            .as("text"),
-          lit("en").as("lang"), lit("planted").as("source"),
-          lit(100L).cast(big.schema("n_chars").dataType).as("n_chars"))
+      "dedup_near_canonical" -> (() =>
         graft.ops.Dedup.dedupNearCanonical(big.unionByName(planted),
-          "doc_id", "text", col("n_chars"), threshold = 0.8).count()
-      }),
+          "doc_id", "text", col("n_chars"), threshold = 0.8).count()),
       // r15: the documented mitigation for identical-text mega-cliques,
       // at scale — exactFirst collapses the planted 10k clique to ONE
       // doc BEFORE banding, so the cap never fires for it and the keep
@@ -165,18 +149,10 @@ object Soak {
       // lone survivor may still near-dup-match organic copies of its
       // family). Runtime must stay flat: the exact pre-stage is one
       // hash aggregate + achiever join.
-      "dedup_near_canonical_exactfirst" -> (() => {
-        val planted = spark.range(10_000).select(
-          (col("id") + lit(900_000_000L)).as("doc_id"),
-          lit("planted mega bucket boilerplate page body shared by " +
-            "the whole mirror farm with identical words throughout")
-            .as("text"),
-          lit("en").as("lang"), lit("planted").as("source"),
-          lit(100L).cast(big.schema("n_chars").dataType).as("n_chars"))
+      "dedup_near_canonical_exactfirst" -> (() =>
         graft.ops.Dedup.dedupNearCanonical(big.unionByName(planted),
           "doc_id", "text", col("n_chars"), threshold = 0.8,
-          exactFirst = true).count()
-      }),
+          exactFirst = true).count()),
       // r15: one at-scale record of the RELIABLE materialization
       // strategy (DFS checkpoint per pin instead of executor-local
       // blocks — the executor-loss-tolerant 100-TB posture). Same op
@@ -544,24 +520,16 @@ object Soak {
     // hypervisor steal per run, so an adjudication can tell heap
     // pressure (wall ≈ GC delta) from host steal (wall tracks steal
     // jiffies) from a real plan/op cost
-    import scala.jdk.CollectionConverters._
-    def gcMillis(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def stealJiffies(): Long = try {
-      val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).get.trim.split("\\s+")
-      if (cpu.length > 8) cpu(8).toLong else 0L
-    } catch { case _: Throwable => 0L }
     def timeOnce(f: () => Long): (Long, Double, Double, Long) = {
-      val g0 = gcMillis(); val s0 = stealJiffies()
+      val g0 = Harness.gcMillis(); val s0 = Harness.host()._1
       val t0 = System.nanoTime()
       val r = f()
       val dt = (System.nanoTime() - t0) / 1e9
       release() // blocks are per-run; carrying them is contamination
-      (r, dt, (gcMillis() - g0) / 1e3, stealJiffies() - s0)
+      (r, dt, (Harness.gcMillis() - g0) / 1e3, Harness.host()._1 - s0)
     }
     // per-op: single-shot by default; median-of-N + spread with GC
-    // between iterations in adjudication mode (the SoakTpch protocol)
+    // between iterations in adjudication mode
     val results = selected.map { case (name, f) =>
       val runs = Seq.fill(iters) {
         if (iters > 1) { System.gc(); Thread.sleep(200) }
@@ -581,29 +549,17 @@ object Soak {
         results.map { case (n, _, _, lo, hi) => f""""$n":[$lo%.2f,$hi%.2f]""" }
           .mkString(""","iters":""" + iters + ""","spread":{""", ",", "}")
       else ""
-    // Provenance labels (r16 lesson: two 67-73 s experiment lines from
-    // an unpinned-variant A/B sat next to the 41 s pinned record with
-    // identical params and nothing to tell them apart — a future
-    // reader diffing soak history couldn't distinguish experiment from
-    // regression). `head` is the commit the binary was built from;
-    // `variant` names the experiment lane (default "default";
-    // adjudication runs set SPARK_GRAFT_SOAK_VARIANT).
-    val head = sys.env.get("SPARK_GRAFT_HEAD").orElse(
-      try Some(scala.sys.process.Process(
-        Seq("git", "rev-parse", "--short", "HEAD")).!!.trim)
-      catch { case _: Throwable => None }).getOrElse("unknown")
+    // `variant` names the experiment lane, so an A/B run's lines are
+    // not mistaken for the default record (SPARK_GRAFT_SOAK_VARIANT)
     val variant = sys.env.getOrElse("SPARK_GRAFT_SOAK_VARIANT", "default")
     val json =
-      s"""{"soak":"dedup","head":"$head","variant":"$variant",""" +
+      s"""{"soak":"dedup",${Harness.provenance(cpus)},"variant":"$variant",""" +
         s""""copies":$copies,"docs":$nDocs,""" +
         results.map { case (n, rows, med, _, _) =>
           f""""$n":{"rows":$rows,"sec":$med%.2f}""" }.mkString(",") +
         spread + s""","heap_used_mb":$heapUsedMb}"""
     println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("SOAK_LOCAL.json"), json + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    Harness.appendLine("SOAK_LOCAL.json", json)
     spark.stop()
   }
 }

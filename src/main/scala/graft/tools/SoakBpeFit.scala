@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Tokenizer-fit soak at crawl-vocabulary scale (VERDICT r13 item 1):
@@ -45,15 +44,8 @@ object SoakBpeFit {
   def main(args: Array[String]): Unit = {
     val nWords = sys.env.getOrElse("SPARK_GRAFT_FIT_WORDS", "1300000").toLong
     val nMerges = sys.env.getOrElse("SPARK_GRAFT_FIT_MERGES", "100").toInt
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(cpus)
 
     val alphabet =
       "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
@@ -71,22 +63,22 @@ object SoakBpeFit {
     val distinct = wc.count()
     require(distinct == nWords, s"vocab not distinct: $distinct != $nWords")
 
-    def run(cap: Int, pinEvery: Int): (Seq[(String, String)], Int, Double) = {
+    /** (fit result, Spark jobs submitted, wall seconds) */
+    def measured[T](fit: => T): (T, Int, Double) = {
       val counter = new JobCounter
       spark.sparkContext.addSparkListener(counter)
       val t0 = System.nanoTime()
       // withBatchRelease: drop exactly this run's pins afterwards —
-      // NOT the shared wc checkpoint both runs read (sweeping the
+      // NOT the shared wc checkpoint every run reads (sweeping the
       // whole persistent-RDD map here killed the second run with
       // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
-      val merges = graft.ops.Materialize.withBatchRelease(spark) {
-        graft.ops.Bpe.fitDistributed(wc, nMerges,
-          batchCap = cap, pinEvery = pinEvery)
-      }
+      val r = graft.ops.Materialize.withBatchRelease(spark)(fit)
       val dt = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.removeSparkListener(counter)
-      (merges, counter.n.get(), dt)
+      (r, counter.n.get(), dt)
     }
+    def run(cap: Int, pinEvery: Int) =
+      measured(graft.ops.Bpe.fitDistributed(wc, nMerges, batchCap = cap, pinEvery = pinEvery))
 
     // batched first so the sequential run cannot inherit a warm cache
     // advantage it then "loses"; both run against the same pinned wc
@@ -101,24 +93,14 @@ object SoakBpeFit {
     // sequential pick order; WordPiece.fitDistributed scaladoc). The
     // soak measures the job economics and pins determinism across
     // runs; merge-list identity is deliberately not asserted.
-    def runWp(cap: Int): (Seq[String], Int, Double) = {
-      val counter = new JobCounter
-      spark.sparkContext.addSparkListener(counter)
-      val t0 = System.nanoTime()
-      val merged = graft.ops.Materialize.withBatchRelease(spark) {
-        graft.ops.WordPiece.fitDistributed(wc, nMerges, batchCap = cap)
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(counter)
-      (merged, counter.n.get(), dt)
-    }
+    def runWp(cap: Int) = measured(graft.ops.WordPiece.fitDistributed(wc, nMerges, batchCap = cap))
     val (wB, wjB, wtB) = runWp(cap = 64)
     val (wB2, _, _) = runWp(cap = 64)
     require(wB == wB2, "batched WordPiece fit is not deterministic")
     val (_, wjS, wtS) = runWp(cap = 1)
 
     val json =
-      s"""{"soak":"bpe_fit","words":$distinct,"merges":$nMerges,""" +
+      s"""{"soak":"bpe_fit",${Harness.provenance(cpus)},"words":$distinct,"merges":$nMerges,""" +
         s""""seq_jobs":$jSeq,"batched_jobs":$jBat,""" +
         f""""job_ratio":${jSeq.toDouble / jBat}%.1f,""" +
         f""""seq_sec":$tSeq%.1f,"batched_sec":$tBat%.1f,""" +
@@ -128,10 +110,7 @@ object SoakBpeFit {
         f""""wp_seq_sec":$wtS%.1f,"wp_batched_sec":$wtB%.1f,""" +
         s""""wp_batched_tokens":${wB.size},"wp_deterministic":true}"""
     println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("SOAK_LOCAL.json"), json + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    Harness.appendLine("SOAK_LOCAL.json", json)
     spark.stop()
   }
 }

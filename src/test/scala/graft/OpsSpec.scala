@@ -6,7 +6,6 @@ import graft.ops.{Dedup, Multimodal, Similarity, Skew, TextAnalysis => TA}
 /** dedup / similarity / text-analysis semantics on small controlled data. */
 class OpsSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   val doc0Text = "the quick brown fox jumps over the lazy dog again and again"
 
@@ -2864,6 +2863,46 @@ class OpsSpec extends SparkSpec {
     } finally Materialize.strategy = Materialize.Local
   }
 
+  test("Materialize.pin: the pin job is described as `pin @ <calling " +
+    "graft site>`, and under Off no pin job is submitted") {
+    import graft.ops.Materialize
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties.getProperty("spark.job.description")).foreach(descs.add)
+    }
+    // The bus delivers in order: once a marker job's start is seen, every
+    // job submitted before it has been seen. Returns the pin jobs seen.
+    def pinJobsBefore(marker: String): Seq[String] = {
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!descs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(descs.contains(marker), "listener bus did not drain")
+      val seen = descs.toArray(Array.empty[String]).toSeq.filter(_.startsWith("pin @"))
+      descs.clear()
+      seen
+    }
+    val df = Seq(1L, 2L, 3L).toDF("x")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      MaterializeProbe.pin(df).collect()
+      // the probe's class name contains "Materialize" but is not the
+      // Materialize object, so it is the site, not skipped
+      val local = pinJobsBefore("after-local")
+      assert(local.nonEmpty && local.forall(_.startsWith("pin @ MaterializeProbe$.pin:")),
+        local.mkString("; "))
+      Materialize.strategy = Materialize.Off
+      assert(MaterializeProbe.pin(df) eq df)
+      val off = pinJobsBefore("after-off")
+      assert(off.isEmpty, off.mkString("; "))
+    } finally {
+      Materialize.strategy = Materialize.Local
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
   test("perceptual hashes: real decode→grid path; near-identical images " +
     "pair at small hamming distance, unrelated don't; corrupt → null") {
     import java.awt.image.BufferedImage
@@ -3485,4 +3524,10 @@ class OpsSpec extends SparkSpec {
       assert(got == Set(1L))
     } finally spark.conf.unset(Skew.MaxFilterBytesConf)
   }
+}
+
+/** A graft call site for the Materialize.pin attribution test. */
+object MaterializeProbe {
+  def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    graft.ops.Materialize.pin(df)
 }

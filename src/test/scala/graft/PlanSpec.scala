@@ -10,7 +10,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
   *  - broadcast hints survive to the optimized plan where we placed them.
   */
 class PlanSpec extends SparkSpec {
-  initLogs()
 
   test("no registry query plans a global (empty-partition) Window") {
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -363,8 +362,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("SQL users reach graft_dot via SparkSessionExtensions") {
-    // spark.sql.extensions is static conf — set in the session builders
-    // (SparkSpec here; Verify/Bench for the driver surface)
+    // spark.sql.extensions is static conf — set once, in Harness.session
     val r = spark.sql(
       "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .head().getDouble(0)

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 /** registry smoke: every declared query runs and returns rows at sf0.001
   * (the DuckDB hash gate runs via scripts/check.py — see the verify skill). */
 class QueriesSpec extends SparkSpec {
-  initLogs()
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)

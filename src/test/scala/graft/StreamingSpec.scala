@@ -3,13 +3,13 @@ package graft
 import scala.annotation.nowarn
 import org.apache.spark.sql.functions._
 import graft.streaming.Events
+import graft.tools.Harness
 
 /** Structured Streaming: the streaming path must agree with the identical
   * batch transform (same code, incremental execution). */
 @nowarn("cat=deprecation") // batch-differential intentionally uses sessionize
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
-  initLogs()
 
   // --- r16 flake instrumentation (VERDICT r15 #1) --------------------------
   // One transient failure at the r15 218-row head never reproduced and was
@@ -23,35 +23,18 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.createDirectories(dir)
     dir.resolve(s"run-${System.currentTimeMillis}-${System.nanoTime % 100000}.jsonl")
   }
-  private def logLine(s: String): Unit = synchronized {
-    java.nio.file.Files.writeString(streamLog, s + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-  }
-  // Full JSON string escape (the Verify.q escaper): the name and the
-  // exception text are free-form — a quote or backslash in either
-  // would corrupt exactly the post-mortem JSONL this listener exists
-  // to preserve (the r16 quote-to-apostrophe rewrite mangled quotes
-  // AND still let a backslash through).
-  private def jq(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private def logLine(s: String): Unit =
+    synchronized(Harness.appendLine(streamLog.toString, s))
   spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
     override def onQueryStarted(e: QueryStartedEvent): Unit =
       logLine(s"""{"ev":"start","t":${System.currentTimeMillis},""" +
-        s""""name":${Option(e.name).map(jq).getOrElse("null")},"runId":"${e.runId}"}""")
+        s""""name":${Option(e.name).map(Harness.json).getOrElse("null")},"runId":"${e.runId}"}""")
     override def onQueryProgress(e: QueryProgressEvent): Unit =
       logLine(s"""{"ev":"progress","t":${System.currentTimeMillis},"p":${e.progress.json}}""")
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
       logLine(s"""{"ev":"term","t":${System.currentTimeMillis},"runId":"${e.runId}",""" +
-        s""""exception":${e.exception.map(jq).getOrElse("null")}}""")
+        s""""exception":${e.exception.map(Harness.json).getOrElse("null")}}""")
   })
   /** per-batch (batchId → state rows) trail for state-bound assertions —
     * inlined into the failure message so a flake self-attributes. */
