@@ -24,7 +24,9 @@ Defect classes, against the hardened partial oracles (q220/q222/q224):
            0.02 → 0.99) breaks the DOWNSTREAM row (q221/q223/q225),
            whose oracle replays composition logic over the mutated dump
            while its Spark dump used the true recomputed values.
-Plus q01 (standard full oracle): perturb → FAIL directly.
+Plus q01 (standard full oracle): perturb → FAIL directly, and
+  skip (its dump directory is absent, as when Verify skipped or lost
+  the query) → NO_SPARK_OUTPUT, FAIL.
 Full-oracle rows (q226-q231 families) take drop/dup/extra directly, and
   textmut corrupts one persisted v8 STATE cell (q230's dump) to prove
   the downstream state-replay oracle (q231) flips.
@@ -60,6 +62,7 @@ CASES = [
     ("q224_v7_delta_ratios", "dup",     "q224_v7_delta_ratios", "FAIL"),
     ("q224_v7_delta_ratios", "flip",    "q225_pipeline_v7",     "FAIL"),
     ("q01_groupby_agg",      "perturb", "q01_groupby_agg",      "FAIL"),
+    ("q01_groupby_agg",      "skip",    "q01_groupby_agg",      "FAIL"),
     # r19: the extra/null classes drilled against EVERY hardened partial
     # oracle (they were previously exercised only via q220, while the
     # q222/q224 registry comments claimed full three-direction backing)
@@ -143,9 +146,12 @@ def mutate(df: pd.DataFrame, kind: str) -> pd.DataFrame:
 def run_case(mut_q: str, kind: str, check_q: str, expected: str,
              oracle: dict) -> bool:
     shutil.rmtree(DRILL, ignore_errors=True)
-    os.makedirs(f"{DRILL}/{mut_q}")
-    df = pd.read_parquet(f"{SRC}/{mut_q}")
-    mutate(df, kind).to_parquet(f"{DRILL}/{mut_q}/part-0.parquet", index=False)
+    os.makedirs(DRILL)
+    if kind != "skip":  # skip: the checked query's dump never landed
+        os.makedirs(f"{DRILL}/{mut_q}")
+        df = pd.read_parquet(f"{SRC}/{mut_q}")
+        mutate(df, kind).to_parquet(f"{DRILL}/{mut_q}/part-0.parquet",
+                                    index=False)
     if check_q != mut_q:  # downstream row: its own dump stays clean
         shutil.copytree(f"{SRC}/{check_q}", f"{DRILL}/{check_q}")
     # every OTHER dump the oracle reads (e.g. q231 reads q224 + both v8
@@ -167,7 +173,8 @@ def run_case(mut_q: str, kind: str, check_q: str, expected: str,
         if line.startswith(("PASS ", "FAIL ")) and check_q in line:
             verdict, detail = line.split()[0], line
             break
-    ok = verdict == expected and (r.returncode == 0) == (verdict == "PASS")
+    ok = (verdict == expected and (r.returncode == 0) == (verdict == "PASS")
+          and (kind != "skip" or "NO_SPARK_OUTPUT" in detail))
     print(f"{'ok ' if ok else 'BAD'}  {mut_q:22s} {kind:8s}"
           f" -> {check_q:22s} expected={expected} got={verdict} rc={r.returncode}"
           + ("" if ok else f"\n     {detail}"))

@@ -33,7 +33,9 @@ object Tables {
     * identity — no shuffle is ever added; the sub-GB bound keeps it
     * the identity for any input big enough to split naturally.
     * Hash-partitioning on the primary key is deterministic across
-    * task retries (guide §2.5 — never derive placement from rand());
+    * task retries (guide §2.5 — never derive placement from rand()),
+    * which is why `key` is required: a keyless `repartition(p)` is
+    * round-robin;
     * results are unchanged because every query's output order is
     * pinned by its own final sort, which the full oracle gate
     * (row-order-preserving diff) re-proves end to end.
@@ -49,11 +51,8 @@ object Tables {
     * §1.2 step 1). Non-file-backed frames (e.g. over a checkpoint)
     * report no input files and pass through untouched. */
   private val splitBytesCap = 1L << 30
-  def splitForCompute(df: DataFrame,
-                      key: org.apache.spark.sql.Column*): DataFrame = {
-    // r20 (ADVICE): an empty key would silently fall back to round-robin
-    // repartition(p), losing the deterministic hash-placement guarantee
-    require(key.nonEmpty, "splitForCompute: pass an explicit hash key")
+  def splitForCompute(df: DataFrame, key: org.apache.spark.sql.Column,
+                      rest: org.apache.spark.sql.Column*): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val p = sc.defaultParallelism
     val files = df.inputFiles
@@ -64,7 +63,7 @@ object Tables {
         val path = new org.apache.hadoop.fs.Path(f)
         path.getFileSystem(conf).getFileStatus(path).getLen
       }.sum
-      if (total > splitBytesCap) df else df.repartition(p, key: _*)
+      if (total > splitBytesCap) df else df.repartition(p, key +: rest: _*)
     }
   }
 

@@ -96,7 +96,8 @@ object TextHash {
   * identical long arithmetic as the Column chain it replaces
   * ([[graft.ops.TextAnalysis.charTrigramBuckets]]), one tight loop
   * instead of an interpreted per-trigram lambda. Arrays shorter than
-  * 3 yield an empty result (the `when` guard's `otherwise` branch). */
+  * 3 yield an empty result (the `when` guard's `otherwise` branch);
+  * NULL input yields NULL. */
 case class CharTrigramBucketHashes(child: Expression, buckets: Int)
     extends UnaryExpression {
   require(buckets >= 1, "graft_char_trigram_buckets: buckets must be >= 1")

@@ -3,15 +3,16 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 
 /** Process-wide materialization strategy for the engine's iterative
-  * and multi-consumer operators (pageRank, mmrDiversify,
-  * connectedComponents, BPE rounds, the incremental dedup family,
-  * packing prefix sums, ...). Each of those pins an intermediate frame
-  * once per round so (a) lineage stays round-deep-1 instead of
-  * re-deriving exponentially, and (b) frames consumed by several
-  * downstream branches compute once.
+  * and multi-consumer operators (pageRank, connectedComponents, BPE
+  * rounds, the incremental dedup family, packing prefix sums, ...).
+  * Each of those pins an intermediate frame once per round so (a)
+  * lineage stays round-deep-1 instead of re-deriving exponentially,
+  * and (b) frames consumed by several downstream branches compute
+  * once.
   *
-  * HOW a frame pins is a deployment decision, not a per-operator one,
-  * so it lives here as one shared knob:
+  * Whether and HOW a frame pins is a deployment decision, not a
+  * per-operator one, so [[strategy]] is the single switch; operators
+  * take no pin parameter:
   *
   *  - [[Local]] (default) — `localCheckpoint()`: executor-local
   *    blocks, no DFS write. Fast, and right for local[...] runs and
@@ -22,16 +23,19 @@ import org.apache.spark.sql.DataFrame
   *    a write+read of the frame, but a 1000-executor, hours-long run
   *    survives individual executor loss. Set this once at job start
   *    for 100 TB-scale runs.
-  *  - [[Off]] — no pinning: pure lineage. Only sensible for tiny
-  *    inputs or plans the caller pins themselves; iterative lineage
-  *    grows per round.
+  *  - [[Off]] — no pinning: every operator's pure-lazy plan (only the
+  *    [[pinGate]] lineage gates still cut, lazily). Only sensible for
+  *    tiny inputs or plans the caller pins themselves; iterative
+  *    lineage grows per round. Results must not depend on the choice
+  *    (OpsSpec runs a Local-vs-Off sample).
   *
-  * Operators keep their `materialize: Boolean` parameter — it answers
-  * "pin here at all?" (some callers compose the op into a larger plan
-  * they pin once); the strategy answers "pin HOW". The knob is a
-  * process-wide `@volatile var` deliberately: it is set once during
-  * job bootstrap (like `SparkContext.setCheckpointDir` itself), not
-  * flipped mid-query.
+  * Each pin's checkpoint job is labelled `pin @ <call site>`. The label
+  * attaches only because every strategy's `pinFrame` is eager: [[pin]]
+  * restores the job description before returning, so a lazy strategy
+  * would run its checkpoint job later, unlabelled, inside the first
+  * consumer. The knob is a process-wide `@volatile var` deliberately:
+  * it is set once during job bootstrap (like
+  * `SparkContext.setCheckpointDir` itself), not flipped mid-query.
   */
 object Materialize {
 
@@ -118,20 +122,17 @@ object Materialize {
     pinned
   }
 
-  /** Pin `df` per the current strategy iff `enabled` (the operators'
-    * `materialize` flag). */
-  private[graft] def pin(df: DataFrame, enabled: Boolean): DataFrame =
-    if (enabled) pin(df) else df
-
   /** Pin for a LINEAGE GATE that must exist even under [[Off]]
     * (ZOrder.hilbertGate's pushdown barrier: an un-pinned gate is not
-    * a gate). Off gets a LAZY local checkpoint — truncates the logical
-    * plan at LogicalRDD without materializing until the first action —
-    * and, unlike a direct `localCheckpoint(false)` at the call site,
-    * the gate's blocks REGISTER with any active [[withBatchRelease]]
-    * scope exactly like a normal pin: a standing query whose batch
-    * body routes through a gate would otherwise leak one block set per
-    * micro-batch (the release sweeps only registered pins). */
+    * a gate; Packing.packConcat's range partitions, which two branches
+    * must see identically). Off gets a LAZY local checkpoint —
+    * truncates the logical plan at LogicalRDD without materializing
+    * until the first action — and, unlike a direct
+    * `localCheckpoint(false)` at the call site, the gate's blocks
+    * REGISTER with any active [[withBatchRelease]] scope exactly like
+    * a normal pin: a standing query whose batch body routes through a
+    * gate would otherwise leak one block set per micro-batch (the
+    * release sweeps only registered pins). */
   private[graft] def pinGate(df: DataFrame): DataFrame = strategy match {
     case Off =>
       val pinned = df.localCheckpoint(false)
@@ -145,11 +146,8 @@ object Materialize {
     * made by other threads, and broadcast model tables — which are not
     * persistent RDDs — are untouched). Registration is thread-local in
     * [[pin]], so concurrent foreachBatch bodies of distinct standing
-    * queries are safe without serializing them. `spark` is unused but
-    * kept so call sites read as "scoped to this session's batch". */
-  private[graft] def withBatchRelease[T](
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val _ = spark
+    * queries are safe without serializing them. */
+  private[graft] def withBatchRelease[T](body: => T): T = {
     val reg = new java.util.ArrayList[org.apache.spark.rdd.RDD[_]]()
     val outer = batchPins.get()
     batchPins.set(reg)

@@ -33,10 +33,11 @@ import org.apache.spark.sql.functions._
   * boundaries — RangePartitioner re-samples per execution, so an
   * unmaterialized plan could give the two branches different pids and
   * join mismatched (pid, offset) rows (the q45 multi-branch lesson).
-  * Unlike the other ops' materialize flags (pure recompute cost), a
-  * lazy mode here would trade CORRECTNESS — so there is no flag: the
-  * checkpoint is unconditional. Results do not depend on where the
-  * boundaries fall, only on both branches agreeing.
+  * Unlike the other ops' pins (pure recompute cost), skipping this one
+  * would trade CORRECTNESS — so it goes through
+  * [[Materialize.pinGate]], which pins even under [[Materialize.Off]].
+  * Results do not depend on where the boundaries fall, only on both
+  * branches agreeing.
   *
   * Output: one row per (document, pack) overlap —
   * (id, pack_id, tok_start, tok_end): the doc-relative token slice
@@ -60,7 +61,7 @@ object Packing {
     require(maxLen >= 1, "packConcat: maxLen must be >= 1")
     require(startOffset >= 0, "packConcat: startOffset must be >= 0")
     val L = lit(maxLen)
-    val ranged = Materialize.pin(
+    val ranged = Materialize.pinGate(
       df.select(col(id), nTokens.cast("long").as("ntok"))
         .filter(col("ntok") > 0)
         .repartitionByRange(col(id))

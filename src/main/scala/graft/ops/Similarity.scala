@@ -368,68 +368,62 @@ object Similarity {
     *
     * Input: (qid, id, rel, vec) shortlists — ALREADY top-N per query
     * (the expensive retrieval happened upstream; N is tens, the
-    * [[rrfFuse]] posture). Scale shape: every iteration is one
-    * remaining⋈selected equi-join on qid (shortlist-sized), one
-    * (qid, candidate) max aggregate, and one per-qid argmax via a
-    * max_by struct aggregate (the [[assignCells]] trick — never a rank
-    * window); thousands of queries diversify in the same k passes,
-    * each group independent. Iterations localCheckpoint so lineage
-    * stays k-flat.
+    * [[rrfFuse]] posture), ids unique within a query. Scale shape: one
+    * aggregate collects each query's shortlist into ONE row, an array
+    * of (id, rel, vec, running max-sim, rank, score), and a single
+    * projection folds the k greedy rounds over that array (an
+    * `aggregate` over 1..k; each round is a one-pass argmax fold plus
+    * a per-candidate update) — no join, window, shuffle or pin per
+    * round, and a plan whose size does not depend on k, so it is the
+    * same cheap plan under [[Materialize.Off]].
     *
     * Determinism: cosines are the sequential-fold [[dot]] kernel
     * (identical across engines), the MMR score is per-row double
-    * arithmetic, ties break (score desc, id asc) via the negated-id
-    * struct. Returns (qid, rank, id, score) with score rounded 6 dp
-    * at output. */
+    * arithmetic, and the running max-sim is exact, so it equals the
+    * max over the selected set. Ties break (score desc, id asc) in the
+    * fold, for any orderable id type. Returns (qid, rank, id, score)
+    * with score rounded 6 dp at output. */
   def mmrDiversify(candidates: DataFrame, qid: String, id: String,
                    rel: String, vec: String, k: Int,
-                   lambda: Double = 0.7,
-                   materialize: Boolean = true): DataFrame = {
+                   lambda: Double = 0.7): DataFrame = {
     require(k >= 1, "mmrDiversify: k must be >= 1")
     require(lambda >= 0.0 && lambda <= 1.0,
       "mmrDiversify: lambda must be in [0, 1]")
-    val base0 = candidates.select(col(qid).as("__q"), col(id).as("__c"),
-      col(rel).cast("double").as("__rel"),
-      col(vec).cast("array<double>").as("__v"))
-    val base = Materialize.pin(base0, materialize)
-    var remaining = base
-    var picked: DataFrame = null
-    for (t <- 1 to k) {
-      val maxSim =
-        if (t == 1) remaining.withColumn("__ms", lit(0.0))
-        else {
-          val sel = picked.select(col("__q"), col("__v").as("__sv"))
-          remaining.join(sel, Seq("__q"))
-            .groupBy(col("__q"), col("__c"))
-            .agg(first(col("__rel")).as("__rel"), first(col("__v")).as("__v"),
-              max(cosine(col("__v"), col("__sv"))).as("__ms"))
-        }
-      val scored = maxSim.withColumn("__s",
-        lit(lambda) * col("__rel") - lit(1.0 - lambda) * col("__ms"))
-      // argmax in two aggregates rather than a negated-id max_by struct:
-      // unary minus on a STRING id silently casts to null and empties
-      // the result — min(id) at the max score keeps ids type-generic
-      // (ties: score desc then id asc, exact-double equality join)
-      val best = scored.groupBy(col("__q")).agg(max(col("__s")).as("__bs"))
-      val pick0 = scored.join(best, Seq("__q"))
-        .filter(col("__s") === col("__bs"))
-        .groupBy(col("__q"))
-        .agg(min(col("__c")).as("__c"), first(col("__bs")).as("__score"))
-        .withColumn("rank", lit(t))
-        .join(base.select(col("__q"), col("__c"), col("__v")),
-          Seq("__q", "__c"))
-      val pick = Materialize.pin(pick0, materialize)
-      picked = if (t == 1) pick else picked.unionByName(pick)
-      // remaining_t = base ∖ picked_{1..t}, rebuilt from the PINNED base
-      // and the PINNED picks each round (one anti-join, lineage depth 2)
-      // instead of pinning a chained remaining frame per round — same
-      // set either way, k fewer checkpoint jobs per call (r19; the
-      // chained form re-pinned a frame that is derivable in one hop).
-      remaining = base.join(
-        picked.select(col("__q"), col("__c")), Seq("__q", "__c"), "left_anti")
+    import org.apache.spark.sql.types._
+    // null once picked; the max-sim term is 0 before the first pick
+    def score(x: Column) = when(x("rank").isNull, lit(lambda) * x("rel") -
+      lit(1.0 - lambda) * coalesce(x("ms"), lit(0.0)))
+    val noPick = lit(null).cast(StructType(Seq(StructField("s", DoubleType),
+      StructField("c", candidates.schema(id).dataType),
+      StructField("v", ArrayType(DoubleType)))))
+    def greedyRound(st: Column, t: Column): Column = {
+      val best = aggregate(st, noPick, (b, x) =>
+        when(score(x).isNotNull && (b.isNull || score(x) > b("s") ||
+          (score(x) === b("s") && x("c") < b("c"))),
+          struct(score(x).as("s"), x("c").as("c"), x("v").as("v")))
+          .otherwise(b))
+      // bind `best` once per round (a one-element transform), so the
+      // per-candidate update below does not re-fold it per element
+      get(transform(array(best), b => transform(st, x => {
+        val pick = coalesce(x("c") === b("c"), lit(false))
+        struct(x("c").as("c"), x("rel").as("rel"), x("v").as("v"),
+          when(x("rank").isNull && !pick && b.isNotNull,
+            greatest(x("ms"), cosine(x("v"), b("v")))).otherwise(x("ms"))
+            .as("ms"),
+          when(pick, t).otherwise(x("rank")).as("rank"),
+          when(pick, b("s")).otherwise(x("score")).as("score"))
+      })), lit(0))
     }
-    picked.select(col("__q").as(qid), col("rank"), col("__c").as(id),
-      round(col("__score"), 6).as("score"))
+    candidates.groupBy(col(qid).as("__q")).agg(collect_list(struct(
+        col(id).as("c"), col(rel).cast("double").as("rel"),
+        col(vec).cast("array<double>").as("v"),
+        lit(null).cast("double").as("ms"), lit(null).cast("int").as("rank"),
+        lit(null).cast("double").as("score"))).as("__st"))
+      .select(col("__q").as(qid), explode(aggregate(
+        sequence(lit(1), lit(k)), col("__st"), greedyRound)).as("__x"))
+      .filter(col("__x.rank").isNotNull)
+      .select(col(qid), col("__x.rank").as("rank"), col("__x.c").as(id),
+        round(col("__x.score"), 6).as("score"))
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher, SIGIR 2009 —

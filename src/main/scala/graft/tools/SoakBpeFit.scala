@@ -72,7 +72,7 @@ object SoakBpeFit {
       // NOT the shared wc checkpoint every run reads (sweeping the
       // whole persistent-RDD map here killed the second run with
       // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
-      val r = graft.ops.Materialize.withBatchRelease(spark)(fit)
+      val r = graft.ops.Materialize.withBatchRelease(fit)
       val dt = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.removeSparkListener(counter)
       (r, counter.n.get(), dt)

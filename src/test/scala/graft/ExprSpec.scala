@@ -397,7 +397,8 @@ class ExprSpec extends SparkSpec {
       (i.toLong, Seq.fill(rnd.nextInt(40))(
         Seq(0L, 65L, 122L, 0x7fL, 0x80L, 0x4e2dL, 0x1f600L)(rnd.nextInt(7))))
     } ++ Seq((200L, Seq.empty[Long]), (201L, Seq(65L, 66L)))
-    val df = rows.toDF("id", "cp").repartition(4)
+    val df = (rows.map { case (i, cp) => (i, Option(cp)) } :+
+      ((202L, Option.empty[Seq[Long]]))).toDF("id", "cp").repartition(4)
     val ref = when(size($"cp") >= 3,
       transform(sequence(lit(0), size($"cp") - 3), i => {
         val p1 = (lit(7L) * 31 + get($"cp", i)) % M
@@ -408,7 +409,18 @@ class ExprSpec extends SparkSpec {
     val got = df.select($"id",
         graft.expr.TextHashExpressions.charTrigramBuckets($"cp", 512).as("g"),
         ref.as("r")).collect()
-    got.foreach(r => assert(r.getSeq[Long](1) == r.getSeq[Long](2),
+    val (nul, rest) = got.partition(_.getLong(0) == 202L)
+    assert(nul.length == 1 && nul.head.isNullAt(1), "NULL in → NULL out")
+    rest.foreach(r => assert(r.getSeq[Long](1) == r.getSeq[Long](2),
       s"id=${r.getLong(0)}"))
+    // every caller explodes the buckets: NULL, "" and a two-code-point
+    // string all contribute zero trigram rows; three code points one
+    val texts = Seq((1L, null.asInstanceOf[String]), (2L, ""), (3L, "ab"),
+      (4L, "abc")).toDF("id", "t")
+    val perId = texts
+      .select($"id", graft.ops.TextAnalysis.charCodePoints($"t").as("cp"))
+      .select($"id", explode(graft.ops.TextAnalysis.charTrigramBuckets($"cp", 512)))
+      .groupBy("id").count().as[(Long, Long)].collect().toMap
+    assert(perId == Map(4L -> 1L), s"trigram rows per id: $perId")
   }
 }

@@ -1835,12 +1835,10 @@ class OpsSpec extends SparkSpec {
         .filter($"d" < cut).orderBy("d")
         .as[(Long, Long, Long, Long)].collect().toSeq
     assert(run() == expect, "gated filter under the default pin")
-    val saved = Materialize.strategy
-    try {
-      Materialize.strategy = Materialize.Off
+    withStrategy(Materialize.Off) {
       assert(run() == expect, "gated filter under Materialize.Off " +
         "(lazy localCheckpoint arm)")
-    } finally Materialize.strategy = saved
+    }
     // n = 2 routes through the canonical 2-D orientation
     val flat = pts.map(p => (p._1, p._2)).toDF("x", "y")
     val g2 = ZOrder.hilbertGate(flat, Seq($"x", $"y"), 6, "d")
@@ -2310,8 +2308,9 @@ class OpsSpec extends SparkSpec {
     // suite session registers it).
     val d = Seq((1L, doc0Text), (2L, doc0Text + " extra"))
       .toDF("doc_id", "text")
-    assert(Dedup.minhashLsh(d, "doc_id", "text", 0.8,
-      materialize = false).count() == 1L)
+    withStrategy(graft.ops.Materialize.Off) {
+      assert(Dedup.minhashLsh(d, "doc_id", "text", 0.8).count() == 1L)
+    }
     def hidden(o: AnyRef, name: String): AnyRef = {
       var c: Class[_] = o.getClass
       var f: java.lang.reflect.Field = null
@@ -2839,8 +2838,7 @@ class OpsSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
       .toString
-    Materialize.strategy = Materialize.Reliable(dir)
-    try {
+    withStrategy(Materialize.Reliable(dir)) {
       val rel = Graph.pageRank(edges, "s", "t", iterations = 6)
         .as[(Long, Double)].collect().toMap
       assert(rel == local, "reliable pageRank bit-identical")
@@ -2856,11 +2854,12 @@ class OpsSpec extends SparkSpec {
       assert(countFiles(java.nio.file.Paths.get(dir)) > 0,
         "reliable strategy wrote DFS checkpoints")
       // Off runs too (pure lineage — tiny input)
-      Materialize.strategy = Materialize.Off
-      val off = Graph.pageRank(edges, "s", "t", iterations = 3)
-        .as[(Long, Double)].collect().toMap
-      assert(math.abs(off.values.sum - 1.0) < 1e-9)
-    } finally Materialize.strategy = Materialize.Local
+      withStrategy(Materialize.Off) {
+        val off = Graph.pageRank(edges, "s", "t", iterations = 3)
+          .as[(Long, Double)].collect().toMap
+        assert(math.abs(off.values.sum - 1.0) < 1e-9)
+      }
+    }
   }
 
   test("Materialize.pin: the pin job is described as `pin @ <calling " +
@@ -2893,13 +2892,26 @@ class OpsSpec extends SparkSpec {
       val local = pinJobsBefore("after-local")
       assert(local.nonEmpty && local.forall(_.startsWith("pin @ MaterializeProbe$.pin:")),
         local.mkString("; "))
-      Materialize.strategy = Materialize.Off
-      assert(MaterializeProbe.pin(df) eq df)
-      val off = pinJobsBefore("after-off")
-      assert(off.isEmpty, off.mkString("; "))
-    } finally {
-      Materialize.strategy = Materialize.Local
-      spark.sparkContext.removeSparkListener(listener)
+      withStrategy(Materialize.Off) {
+        assert(MaterializeProbe.pin(df) eq df)
+        val off = pinJobsBefore("after-off")
+        assert(off.isEmpty, off.mkString("; "))
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("Materialize Local vs Off: registry queries over the dedup, LM, " +
+    "graph, MMR and mixture operators return identical rows at sf0.001") {
+    import graft.ops.Materialize
+    val sample = Seq("q44_ngram_jaccard", "q45_minhash_lsh", "q99_bigram_lm",
+      "q196_ccnet_ppl_buckets", "q170_pagerank", "q177_mmr_rerank",
+      "q167_token_kl")
+    def rows(q: String) = SparkEntry.queries(q)(spark, sfSmoke).collect().toSeq
+    sample.foreach { q =>
+      val local = withStrategy(Materialize.Local)(rows(q))
+      val off = withStrategy(Materialize.Off)(rows(q))
+      assert(local.nonEmpty, s"$q returned no rows")
+      assert(off == local, s"$q: rows differ between Local and Off")
     }
   }
 
@@ -3020,11 +3032,14 @@ class OpsSpec extends SparkSpec {
     assert(prof.count() == 2 * 64, "ALL buckets emit per language")
     assert(prof.filter($"logp" >= 0).isEmpty, "log-probs are negative")
     val held = Seq((1L, "ababab cbacba"), (2L, "zzzyx xyxy"),
-      (3L, "ab"), (4L, "")).toDF("doc_id", "text")
+      (3L, "ab"), (4L, ""), (5L, null.asInstanceOf[String]))
+      .toDF("doc_id", "text")
     val got = TA.predictLangTrained(held, "doc_id", "text", prof,
         buckets = 64)
       .as[(Long, String)].collect().toMap
-    assert(got == Map(1L -> "xx", 2L -> "yy", 3L -> "unk", 4L -> "unk"))
+    assert(got == Map(1L -> "xx", 2L -> "yy", 3L -> "unk", 4L -> "unk",
+      5L -> "unk"))
+    assert(got(5L) == got(4L), "NULL text predicts like empty text")
     // scores: every (doc, lang) pair scores once, exactly 2 langs per doc
     val sc = TA.scoreLangProfiles(held, "doc_id", "text", prof, buckets = 64)
     assert(sc.groupBy("doc_id").count().as[(Long, Long)].collect().toMap ==

@@ -639,9 +639,11 @@ class PlanSpec extends SparkSpec {
     val d = graft.Tables.documents(spark, sfSmoke)
     val fit = d.filter(org.apache.spark.sql.functions.col("source")
       .isin("src0", "src1"))
-    val sc = graft.ops.TextAnalysis.ccnetPerplexity(
-      d, "doc_id", "text", "lang", fit, materialize = false)
-    val n = occurrenceStreamJoins(sc.queryExecution.optimizedPlan)
+    val n = withStrategy(graft.ops.Materialize.Off) {
+      val sc = graft.ops.TextAnalysis.ccnetPerplexity(
+        d, "doc_id", "text", "lang", fit)
+      occurrenceStreamJoins(sc.queryExecution.optimizedPlan)
+    }
     assert(n == 1, s"expected 1 occurrence-stream join, got $n")
     val qe = SparkEntry.queries("q196_ccnet_ppl_buckets")(spark, sfSmoke)
       .queryExecution
